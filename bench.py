@@ -1,14 +1,15 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+CPUs) and prints ONE JSON line:
+{"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
 
 The flagship measurement is transcript extraction throughput
 (turns/sec): transcripts are staged once to parquet (generation cost is
 excluded — the 100 TB framing reads an existing Iceberg snapshot), then
-the timed run is read -> salted repartition -> mapInPandas extraction ->
-aggregate, i.e. the full pipeline minus the sink.
+the timed run is read -> mapInArrow extraction -> aggregate, i.e. the
+full pipeline minus the sink.
 
 Usage:
     python bench.py                 # full suite, one JSON line
@@ -29,8 +30,10 @@ import time
 REPO = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+from docling_api_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 # ~650k convs/sf => ~2M turns at sf0.1 (turn mix per FIXTURES.md §1)
 CONVS_PER_SF = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS_PER_SF", "650000"))
 STAGE_ROOT = pathlib.Path(os.environ.get("SPARK_GRAFT_STAGE", "/tmp/spark_graft_bench"))
@@ -78,7 +81,7 @@ def warmup(spark, staged: str) -> None:
 
 
 def run_extraction_bench(spark, staged: str) -> dict:
-    """Timed: read snapshot -> salt/repartition -> extract -> aggregate."""
+    """Timed: read snapshot -> extract -> aggregate."""
     from pyspark.sql import functions as F
 
     from docling_api_spark.operators.extract import extract_text_column
@@ -174,44 +177,8 @@ def main() -> None:
         import __spark_entry__ as entrymod
 
         q = entrymod.queries()
-        names = [
-            "extract_documents",
-            "extract_doc_json",
-            "tier_usage_pricing",
-            "q1_pricing_summary",
-            "j4_parity_join",
-            "a4_usage_rollup",
-            "w1_rate_windows",
-            "w2_turn_ordering",
-            "skew_salted_rollup",
-            "join_temporal",
-            "dedup_exact",
-            "dedup_minhash_lsh",
-            "dedup_simhash",
-            "dedup_embedding_lsh",
-            "dedup_cc_clusters",
-            "sim_cosine_topk",
-            "text_quality",
-            "text_token_stats",
-            "text_fingerprint",
-            "decontaminate_ngrams",
-            "multimodal_frames",
-            # round-4 registry rotation: the curation layer's driver
-            # queries (see __spark_entry__.py registry note)
-            "curation_group_split",
-            "curation_chunk_documents",
-            "curation_domain_stats",
-            "curation_pagerank",
-            "curation_nb_quality",
-            "dedup_index_matches",
-            "corpus_funnel",
-            # round-5 registry rotation (see __spark_entry__.py note):
-            # sim_ann_topk retired (sim_ann_recall runs both ANN paths);
-            # corpus card, mixture builder, span-dedup soundness added
-            "corpus_profile",
-            "curation_mixture",
-            "spandedup_soundness",
-        ]
+        # extract_transcripts is timed above, on the staged snapshot
+        names = [n for n in q if n != "extract_transcripts"]
         # two interleaved passes over the whole sweep, best-of-2 per
         # query: single-shot timings on this shared host drift 2-3x with
         # co-tenant load, making round-over-round regressions

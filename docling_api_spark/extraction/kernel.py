@@ -9,9 +9,9 @@ error capsuling (modal_docling.py:259-264).
 
 This module is PURE PYTHON + numpy, no Spark imports. The SAME functions
 back both the single-node oracle (golden fixtures, pytest) and the
-``mapInPandas`` batch UDFs — so Spark-vs-oracle equality tests the Spark
-plumbing (ordering, batching, Arrow encoding), not two divergent
-implementations.
+``mapInArrow`` extraction operator — so Spark-vs-oracle equality tests
+the Spark plumbing (ordering, batching, Arrow encoding), not two
+divergent implementations.
 
 Determinism rules (SURVEY.md §4.3): no wall clock, no randomness, no
 dict-order leaks, no batch-boundary dependence — each document's result
@@ -1138,9 +1138,7 @@ def extract_flat(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, 
 def extract_records(texts, options: ExtractOptions = DEFAULT_OPTIONS) -> dict[str, list]:
     """Batch kernel: iterable of payload strings -> column lists.
 
-    This is the unit that runs once per Arrow record batch inside
-    ``mapInPandas`` — vectorized at the batch level, zero Spark-row
-    Python calls."""
+    The oracle's batch form; the Spark operator uses ``extract_flat``."""
     cols: dict[str, list] = {
         "status": [], "payload_kind": [], "extracted_text": [],
         "doc_json": [], "spans": [], "pages": [], "n_nodes": [], "error": [],

@@ -111,6 +111,7 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
         # (with its precompiled regex automata) loads once per worker and
         # is reused across batches (worker reuse is on by default).
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
         from docling_api_spark.extraction.kernel import (
             ExtractOptions,
@@ -122,12 +123,12 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
         else:
             opts = ExtractOptions(opt_fmt, opt_tables, opt_maxchars)
 
-        span_struct = pa.struct([
-            pa.field("start", pa.int64(), nullable=False),
-            pa.field("end", pa.int64(), nullable=False),
-            pa.field("node_id", pa.int32(), nullable=False),
-            pa.field("kind", pa.string(), nullable=False),
-        ])
+        result_fields = [
+            pa.field(f.name, to_arrow_type(f.dataType), f.nullable)
+            for f in EXTRACT_RESULT_FIELDS
+        ]
+        spans_type = next(f.type for f in result_fields if f.name == "spans")
+        span_fields = list(spans_type.value_type)
         out_arrow = None  # built from the first batch (keeps input arrow
         # types, e.g. timestamp unit/tz, exactly as Spark sent them)
 
@@ -136,43 +137,24 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
             cols = extract_flat(b.column(idx).to_pylist(), opts)
 
             structs = pa.StructArray.from_arrays(
-                [
-                    pa.array(cols["span_start"], pa.int64()),
-                    pa.array(cols["span_end"], pa.int64()),
-                    pa.array(cols["span_node_id"], pa.int32()),
-                    pa.array(cols["span_kind"], pa.string()),
-                ],
-                fields=list(span_struct),
+                [pa.array(cols[f"span_{f.name}"], f.type) for f in span_fields],
+                fields=span_fields,
             )
             spans = pa.ListArray.from_arrays(
-                pa.array(cols["span_offsets"], pa.int32()), structs
+                pa.array(cols["span_offsets"], pa.int32()), structs,
+                type=spans_type,
             )
             keep_arrays = [
                 b.column(b.schema.get_field_index(c)) for c in keep
             ]
             result_arrays = [
-                pa.array(cols["status"], pa.string()),
-                pa.array(cols["payload_kind"], pa.string()),
-                pa.array(cols["extracted_text"], pa.string()),
-                pa.array(cols["doc_json"], pa.string()),
-                spans,
-                pa.array(cols["pages"], pa.int32()),
-                pa.array(cols["n_nodes"], pa.int32()),
-                pa.array(cols["error"], pa.string()),
+                spans if f.name == "spans" else pa.array(cols[f.name], f.type)
+                for f in result_fields
             ]
             if out_arrow is None:
                 out_arrow = pa.schema(
                     [b.schema.field(b.schema.get_field_index(c)) for c in keep]
-                    + [
-                        pa.field("status", pa.string()),
-                        pa.field("payload_kind", pa.string()),
-                        pa.field("extracted_text", pa.string()),
-                        pa.field("doc_json", pa.string()),
-                        pa.field("spans", pa.list_(span_struct)),
-                        pa.field("pages", pa.int32()),
-                        pa.field("n_nodes", pa.int32()),
-                        pa.field("error", pa.string()),
-                    ]
+                    + result_fields
                 )
             yield pa.RecordBatch.from_arrays(
                 keep_arrays + result_arrays, schema=out_arrow

@@ -94,7 +94,7 @@ def encode_fake_audio(sample_rate: int, samples: bytes) -> bytes:
 
 
 def _map_binary_column(df: DataFrame, bin_col: str, out_field: T.StructField,
-                       arrow_type_fn, payload_fn, drop_input: bool = True):
+                       payload_fn, drop_input: bool = True):
     """Shared mapInArrow harness for the multimodal operators: keep every
     other column zero-copy, run ``payload_fn`` once per payload (header
     parsing of variable-length binaries is inherently per-row; numpy does
@@ -112,8 +112,9 @@ def _map_binary_column(df: DataFrame, bin_col: str, out_field: T.StructField,
 
     def run(batches: Iterator) -> Iterator:
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        out_type = arrow_type_fn(pa)
+        out_type = to_arrow_type(out_field.dataType)
         out_arrow = None
         for b in batches:
             payloads = b.column(b.schema.get_field_index(bin_col))
@@ -122,7 +123,7 @@ def _map_binary_column(df: DataFrame, bin_col: str, out_field: T.StructField,
             if out_arrow is None:
                 out_arrow = pa.schema(
                     [b.schema.field(b.schema.get_field_index(c)) for c in keep]
-                    + [pa.field(out_field.name, out_type)]
+                    + [pa.field(out_field.name, out_type, out_field.nullable)]
                 )
             yield pa.RecordBatch.from_arrays(
                 keep_arrays + [pa.array(values, type=out_type)],
@@ -130,16 +131,6 @@ def _map_binary_column(df: DataFrame, bin_col: str, out_field: T.StructField,
             )
 
     return df.mapInArrow(run, schema=out_schema)
-
-
-def _image_meta_arrow(pa):
-    return pa.struct([
-        pa.field("width", pa.int32()),
-        pa.field("height", pa.int32()),
-        pa.field("n_bytes", pa.int64(), nullable=False),
-        pa.field("format", pa.string()),
-        pa.field("mean_byte", pa.float64()),
-    ])
 
 
 def with_image_metadata(df: DataFrame, bin_col: str = "image") -> DataFrame:
@@ -166,7 +157,7 @@ def with_image_metadata(df: DataFrame, bin_col: str = "image") -> DataFrame:
 
     return _map_binary_column(
         df, bin_col, T.StructField("image_meta", IMAGE_META_SCHEMA, True),
-        _image_meta_arrow, meta,
+        meta,
     )
 
 
@@ -191,16 +182,8 @@ def resize_image(df: DataFrame, bin_col: str = "image",
 
     return _map_binary_column(
         df, bin_col, T.StructField(out_col, T.BinaryType(), True),
-        lambda pa: pa.binary(), resize, drop_input=False,
+        resize, drop_input=False,
     )
-
-
-def _frames_arrow(pa):
-    return pa.list_(pa.struct([
-        pa.field("frame_idx", pa.int32(), nullable=False),
-        pa.field("n_bytes", pa.int32(), nullable=False),
-        pa.field("mean_byte", pa.float64()),
-    ]))
 
 
 def sample_video_frames(df: DataFrame, bin_col: str = "video",
@@ -228,17 +211,8 @@ def sample_video_frames(df: DataFrame, bin_col: str = "video",
 
     return _map_binary_column(
         df, bin_col, T.StructField("frames", T.ArrayType(FRAME_SCHEMA), True),
-        _frames_arrow, frames,
+        frames,
     )
-
-
-def _audio_arrow(pa):
-    return pa.struct([
-        pa.field("sample_rate", pa.int32()),
-        pa.field("n_samples", pa.int64(), nullable=False),
-        pa.field("duration_s", pa.float64()),
-        pa.field("rms", pa.float64()),
-    ])
 
 
 def with_audio_features(df: DataFrame, bin_col: str = "audio") -> DataFrame:
@@ -266,5 +240,5 @@ def with_audio_features(df: DataFrame, bin_col: str = "audio") -> DataFrame:
 
     return _map_binary_column(
         df, bin_col, T.StructField("audio_meta", AUDIO_META_SCHEMA, True),
-        _audio_arrow, features,
+        features,
     )

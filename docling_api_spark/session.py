@@ -19,6 +19,11 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 4096
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "docling_api_spark",
     master: str | None = None,
@@ -27,10 +32,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench agree with the driver harness.
+    ``master`` defaults to ``local[default_cpus()]`` so tests and bench
+    agree with the driver harness.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; "local[*]" → os cpu count
