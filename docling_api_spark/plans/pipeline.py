@@ -19,20 +19,34 @@ Scale design:
 - **Skew salting**: a consumer that DOES need conv-co-located rows uses
   ``skew_aware_repartition``, which splits only conversations longer
   than ``SALT_BLOCK`` turns into blocks. The write shuffle salts on
-  ``(conv_id, turn_idx)`` (``_wsalt``) to bound files-per-bucket
-  without hot write tasks.
+  ``(conv_id, turn_idx)`` (``_wsalt``) into ``ceil(2 * parts /
+  n_buckets)`` salts, about two (bucket, salt) keys per write task: a
+  bucket fans out over several files only when there are more write
+  tasks than buckets, and is one file otherwise.
+- **Fixed per-call cost**: lineage is built as an Arrow table in the
+  driver (no Python worker on the write path), and the read-back lists
+  its bucket dirs in the driver (``get_spark`` raises Spark's parallel
+  partition-discovery threshold).
 """
 
 from __future__ import annotations
 
+import contextlib
 import pathlib
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docling_api_spark.operators.extract import extract_text_column
 from docling_api_spark.operators.metering import credits_col
-from docling_api_spark.plans.checkpoint import Manifest, committed_view
+from docling_api_spark.plans.checkpoint import (
+    Manifest,
+    committed_view,
+    manifest_data_reader,
+)
+from docling_api_spark.schema import LINEAGE_SCHEMA
 
 DEFAULT_BUCKETS = 64
 SALT_BLOCK = 4096  # turns per salt block; >max Arrow batch, < skew threshold
@@ -50,8 +64,11 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
 def _salted_bucket_write(df: DataFrame, num_partitions: int,
                          files_per_bucket: int) -> DataFrame:
     """Shared write-shuffle shape for run_extraction and compact: salt on
-    (conv_id, turn_idx) so each bucket fans out over ~files_per_bucket
-    files instead of hashing whole onto one task."""
+    (conv_id, turn_idx) so each bucket fans out over at most
+    ``files_per_bucket`` files instead of hashing whole onto one task.
+    run_extraction passes ``ceil(2 * num_partitions / n_buckets)``, so
+    each write task gets about two (bucket, salt) keys: 1 (one file per
+    bucket) whenever there are at least half as many tasks as buckets."""
     return (
         df.withColumn(
             "_wsalt",
@@ -103,6 +120,19 @@ def skew_aware_repartition(df: DataFrame, num_partitions: int,
         .drop("_salt", "_heavy")
     )
     return out.sortWithinPartitions("conv_id", "turn_idx") if sort else out
+
+
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs started inside the block, then restore the
+    caller's description (None removes it)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_extraction(
@@ -160,7 +190,7 @@ def run_extraction(
     # stripped — smaller than the input) into the bucketed write layout;
     # _wsalt bounds files-per-bucket while keeping write parallelism.
     parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    files_per_bucket = max(1, parts // n_buckets) * 2
+    files_per_bucket = max(1, -(-2 * parts // n_buckets))
     for_write = _salted_bucket_write(extracted, parts, files_per_bucket)
 
     run_id = manifest.next_run_id()
@@ -170,7 +200,8 @@ def run_extraction(
     # orphan-file semantics) and a resume can never double-count
     to_write = for_write.withColumn("run_id", F.lit(run_id))
     data_schema = to_write.schema  # recorded in the manifest (see commit)
-    to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
+    with _job_description(spark, f"run_extraction {run_id}: data write"):
+        to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
 
     # lineage from the data actually written (verify-what-committed): ONE
     # read-back pass aggregated to <=n_buckets rows, collected, and both
@@ -178,36 +209,34 @@ def run_extraction(
     # count — no second full count() job over the written files. The
     # explicit schema makes a zero-row run (empty input) readable — no
     # UNABLE_TO_INFER_SCHEMA on a file-less partitioned dir.
-    written = spark.read.schema(data_schema).parquet(data_dir).filter(
-        (F.col("run_id") == run_id) & F.col("bucket").isin(pending)
-    )
-    lineage_rows = (
-        written.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows_out"),
-            F.count(F.lit(1)).alias("rows_in"),  # extraction is 1:1
-            F.sum((F.col("status") == "success").cast("long")).alias("n_success"),
-            F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
-            F.sum((F.col("status") == "skipped_ocr").cast("long")).alias("n_skipped_ocr"),
-            F.sum((F.col("payload_kind") == "oversize").cast("long")).alias("n_oversize"),
-            F.sum("pages").alias("pages"),
-            F.sum(credits_col(F.col("pages"))).alias("credits"),
+    with _job_description(spark, f"run_extraction {run_id}: lineage read-back"):
+        written = spark.read.schema(data_schema).parquet(data_dir).filter(
+            (F.col("run_id") == run_id) & F.col("bucket").isin(pending)
         )
-        .collect()
+        lineage_rows = (
+            written.groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).alias("rows_out"),
+                F.count(F.lit(1)).alias("rows_in"),  # extraction is 1:1
+                F.sum((F.col("status") == "success").cast("long")).alias("n_success"),
+                F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
+                F.sum((F.col("status") == "skipped_ocr").cast("long")).alias("n_skipped_ocr"),
+                F.sum((F.col("payload_kind") == "oversize").cast("long")).alias("n_oversize"),
+                F.sum("pages").alias("pages"),
+                F.sum(credits_col(F.col("pages"))).alias("credits"),
+            )
+            .collect()
+        )
+    # built as Arrow in the driver: createDataFrame on a list of tuples
+    # would parallelize it through a Python worker (~1 s per call)
+    lineage = pa.Table.from_pylist(
+        [{"run_id": run_id, "snapshot_id": snapshot_id,
+          "partition_id": r["bucket"], **r.asDict()} for r in lineage_rows],
+        schema=to_arrow_schema(LINEAGE_SCHEMA),
     )
-    from docling_api_spark.schema import LINEAGE_SCHEMA
-
-    lineage = spark.createDataFrame(
-        [
-            (run_id, snapshot_id, int(r["bucket"]), int(r["rows_in"]),
-             int(r["rows_out"]), int(r["n_success"]), int(r["n_error"]),
-             int(r["n_skipped_ocr"]), int(r["n_oversize"]), int(r["pages"]),
-             int(r["credits"]))
-            for r in lineage_rows
-        ],
-        schema=LINEAGE_SCHEMA,
-    )
-    lineage.coalesce(1).write.mode("append").parquet(f"{output_dir}/lineage")
+    with _job_description(spark, f"run_extraction {run_id}: lineage write"):
+        (spark.createDataFrame(lineage, schema=LINEAGE_SCHEMA)
+         .coalesce(1).write.mode("append").parquet(f"{output_dir}/lineage"))
 
     rows = sum(int(r["rows_out"]) for r in lineage_rows)
     manifest.commit(run_id, snapshot_id, pending,
@@ -228,8 +257,6 @@ def compact(spark: SparkSession, output_dir: str,
     crash mid-compaction leaves the previous state fully readable and a
     rerun is idempotent. Must not race an in-flight extraction run.
     """
-    from pyspark.sql import functions as F  # noqa: F401 (local alias clarity)
-
     manifest = Manifest(output_dir)
     committed = committed_view(spark, output_dir)
     run_id = manifest.next_run_id()
@@ -246,8 +273,6 @@ def compact(spark: SparkSession, output_dir: str,
     )
     # read-back with the recorded schema (like run_extraction): inference
     # fails on a file-less dir when every committed run was zero-row
-    from docling_api_spark.plans.checkpoint import manifest_data_reader
-
     rows = (
         manifest_data_reader(spark, manifest).parquet(data_dir)
         .filter(F.col("run_id") == run_id).count()
@@ -414,7 +439,6 @@ def job_status(spark: SparkSession, output_dir: str) -> DataFrame:
     """The reference's GET /v1/status analog (documents.py:302-339): job
     state derived from committed lineage, not from mutable driver state."""
     manifest = Manifest(output_dir)
-    from docling_api_spark.schema import LINEAGE_SCHEMA
     # Read with the EXPLICIT current schema, not footer inference: a
     # resumed pre-upgrade output dir holds lineage files written before
     # n_oversize existed next to post-upgrade ones, and an inferred read

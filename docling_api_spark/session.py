@@ -53,6 +53,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # list the engine's local bucket dirs (64 per run) in the driver, not a job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

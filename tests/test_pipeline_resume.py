@@ -31,6 +31,26 @@ def _read_committed(spark, out_dir) -> pd.DataFrame:
     )
 
 
+def _assert_lineage_footers(out_dir) -> None:
+    """Every lineage file carries LINEAGE_SCHEMA's Arrow form in its
+    footer: names, types (int32 partition_id, int64 counters) and
+    nullability."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from docling_api_spark.schema import LINEAGE_SCHEMA
+
+    want = [(f.name, f.type, f.nullable)
+            for f in to_arrow_schema(LINEAGE_SCHEMA)]
+    files = sorted((pathlib.Path(out_dir) / "lineage").glob("*.parquet"))
+    assert files
+    for f in files:
+        got = [(fl.name, fl.type, fl.nullable) for fl in pq.read_schema(f)]
+        assert got == want, (f.name, got)
+
+
 def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path):
     from docling_api_spark.plans.pipeline import run_extraction
 
@@ -239,18 +259,44 @@ def test_compact_files_per_bucket(spark, transcripts, tmp_path):
     assert per_bucket and all(n > 1 for n in per_bucket), per_bucket
 
 
+def test_files_per_bucket_rule(spark, transcripts, tmp_path):
+    """run_extraction salts each bucket into ceil(2 * parts / n_buckets)
+    write keys: one file per bucket when buckets outnumber half the write
+    tasks, a bounded fan-out when they do not."""
+    import math
+    import pathlib
+
+    from docling_api_spark.plans.pipeline import run_extraction
+
+    parts = spark.sparkContext.defaultParallelism * 2
+
+    def files_per_bucket(out, n_buckets):
+        s = run_extraction(spark, transcripts, str(out), n_buckets=n_buckets)
+        data = pathlib.Path(out) / "data" / f"run_id={s['run_id']}"
+        return [len(list(b.glob("*.parquet")))
+                for b in sorted(data.glob("bucket=*"))]
+
+    many = files_per_bucket(tmp_path / "b64", 64)
+    assert many and max(many) <= 1, many
+    few = files_per_bucket(tmp_path / "b4", 4)
+    assert max(few) > 1, few
+    assert max(few) <= math.ceil(2 * parts / 4), (few, parts)
+
+
 def test_empty_input_run_is_graceful(spark, tmp_path):
     """A fresh run over a zero-row input must commit (empty) buckets and
     stay readable — no schema-inference crash on the file-less data dir."""
     from docling_api_spark.gen import transcripts_df
     from docling_api_spark.plans.checkpoint import committed_view
-    from docling_api_spark.plans.pipeline import run_extraction
+    from docling_api_spark.plans.pipeline import job_status, run_extraction
 
     out = tmp_path / "out"
     empty = transcripts_df(spark, 1).limit(0)
     s = run_extraction(spark, empty, str(out), n_buckets=4)
     assert s["rows"] == 0 and len(s["buckets"]) == 4
     assert committed_view(spark, str(out)).count() == 0
+    _assert_lineage_footers(out)
+    assert job_status(spark, str(out)).count() == 0
     p = run_extraction(spark, empty, str(out), n_buckets=4)
     assert p["buckets"] == [] and p["resumed"]
     # compaction over an all-zero-row output is also readable (schema
@@ -270,6 +316,7 @@ def test_lineage_metrics(spark, transcripts, tmp_path):
     out = tmp_path / "out"
     run_extraction(spark, transcripts, str(out), snapshot_id="snap-test",
                    n_buckets=8)
+    _assert_lineage_footers(out)
     lineage = job_status(spark, str(out)).toPandas()
     assert set(lineage["partition_id"]) == set(range(8))
     assert (lineage["snapshot_id"] == "snap-test").all()
