@@ -84,6 +84,8 @@ def _add_input_format(sp) -> None:
 
 
 def main(argv: list[str] | None = None) -> None:
+    from docling_api_spark.extraction.kernel import MAX_PAYLOAD_CHARS
+
     p = argparse.ArgumentParser(prog="docling_api_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
     for name in ("run", "resume"):
@@ -100,10 +102,11 @@ def main(argv: list[str] | None = None) -> None:
         r.add_argument("--no-tables", action="store_true",
                        help="disable C3 table extraction "
                             "(reference schemas.py:118)")
-        r.add_argument("--max-payload-chars", type=int, default=None,
+        r.add_argument("--max-payload-chars", type=int,
+                       default=MAX_PAYLOAD_CHARS,
                        help="per-turn payload cap; longer turns become "
-                            "oversize error rows (default 65536 — the "
-                            "frozen-fixture constant; the reference "
+                            "oversize error rows (default %(default)s — "
+                            "the frozen-fixture constant; the reference "
                             "accepts 100 MB files, api/config.py:56-59)")
     s = sub.add_parser("status")
     s.add_argument("--output", required=True)
@@ -263,13 +266,11 @@ def main(argv: list[str] | None = None) -> None:
         from docling_api_spark.plans.pipeline import run_extraction
 
         transcripts = _read_input(spark, args.input, args.input_format)
-        opt_kwargs = ({"max_payload_chars": args.max_payload_chars}
-                      if args.max_payload_chars is not None else {})
         summary = run_extraction(
             spark, transcripts, args.output, snapshot_id=args.snapshot,
             n_buckets=args.buckets, limit_buckets=args.limit_buckets,
-            options=ExtractOptions(args.output_format,
-                                   not args.no_tables, **opt_kwargs),
+            options=ExtractOptions(args.output_format, not args.no_tables,
+                                   args.max_payload_chars),
         )
         print(json.dumps(summary))
     elif args.cmd == "status":

@@ -711,7 +711,7 @@ def _parse_html(text: str):
                         t = table_stack[-1]
                         if t.cur_row is not None:
                             t.rows.append(t.cur_row)
-                            if t.in_thead or (name == "tr" and _tr_was_header(t)):
+                            if t.in_thead:
                                 t.header_rows = len(t.rows)
                             t.cur_row = None
                 elif top in ("td", "th"):
@@ -735,11 +735,6 @@ def _parse_html(text: str):
             t.rows.append(t.cur_row)
             t.cur_row = None
     return nodes
-
-
-def _tr_was_header(t: _Table) -> bool:
-    # first row of a table with no thead: treated as header at emission
-    return False
 
 
 # ---------------------------------------------------------------------------

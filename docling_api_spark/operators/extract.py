@@ -102,9 +102,6 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
     ]
     passthrough = T.StructType([df.schema[c] for c in keep])
     out_schema = _result_schema(passthrough)
-    opt_fmt = options.output_format if options is not None else "markdown"
-    opt_tables = options.enable_table_extraction if options is not None else True
-    opt_maxchars = options.max_payload_chars if options is not None else None
 
     def run(batches: Iterator) -> Iterator:
         # import inside the task: keeps the closure tiny; the kernel module
@@ -118,10 +115,7 @@ def extract_text_column(df: DataFrame, text_col: str = "text",
             extract_flat,
         )
 
-        if opt_maxchars is None:
-            opts = ExtractOptions(opt_fmt, opt_tables)
-        else:
-            opts = ExtractOptions(opt_fmt, opt_tables, opt_maxchars)
+        opts = options if options is not None else ExtractOptions()
 
         result_fields = [
             pa.field(f.name, to_arrow_type(f.dataType), f.nullable)

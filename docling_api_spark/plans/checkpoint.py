@@ -5,15 +5,20 @@ files + a snapshot commit; resume = diff committed snapshots. Iceberg
 jars are not in this sandbox (documented substitution, SURVEY.md §7.3.3),
 so snapshots are emulated deterministically:
 
-- ``manifest.json`` lists committed (run_id, bucket) pairs (atomic
-  tmp+rename write). Data files live under ``data/run_id=R/bucket=B/``;
-  a killed run leaves the previous manifest intact, so its partial data
-  files belong to a (run_id, bucket) pair that was never committed and
-  are invisible to ``committed_view`` — the same way Iceberg orphans
-  uncommitted data files. The resume then reprocesses those buckets
-  under a new run_id, with no double counting.
+- ``manifest.json`` is the output dir's single commit record (atomic
+  tmp+rename write): the committed (run_id, bucket) pairs, the data
+  schema, and one lineage record per committed bucket that holds rows.
+  Data files live under ``data/run_id=R/bucket=B/``; a killed run leaves
+  the previous manifest intact, so its partial data files belong to a
+  (run_id, bucket) pair that was never committed and are invisible to
+  ``committed_view`` — the same way Iceberg orphans uncommitted data
+  files. Its lineage was never written either (it rides the same
+  commit). The resume then reprocesses those buckets under a new run_id,
+  with no double counting.
 - Idempotent re-commit: committing an already-committed bucket is a
   no-op (J3 anti-join semantics; reference stripe_service.py:214-231).
+- Only manifests carrying ``MANIFEST_FORMAT`` are read; an output dir
+  written by an older version is refused, not migrated.
 
 Readers of the output MUST go through ``committed_view`` which filters
 to manifest-committed buckets — the Iceberg-snapshot-isolation analog.
@@ -26,6 +31,9 @@ import json
 import os
 import pathlib
 import time
+
+# written into every manifest; _read refuses any other value
+MANIFEST_FORMAT = 1
 
 
 class Manifest:
@@ -58,43 +66,17 @@ class Manifest:
 
     def _read(self) -> dict:
         if not self.path.exists():
-            return {"runs": [], "buckets": [], "run_counter": 0,
-                    "inflight": {}, "retired": []}
+            return {"format": MANIFEST_FORMAT, "runs": [], "buckets": [],
+                    "run_counter": 0, "inflight": {}, "retired": [],
+                    "lineage": {}}
         state = json.loads(self.path.read_text())
-        state.setdefault("retired", [])
-        if "run_counter" not in state:
-            # back-compat migration: the pre-counter era burned ids that
-            # len(runs) does NOT count (compaction collapses runs to one
-            # entry; crashed runs never appear) — seeding with the list
-            # length would REUSE an id whose dir still exists and
-            # resurrect its stale rows into the re-committed partitions.
-            # Seed from the max numeric suffix across every id we can
-            # still see: runs, retired entries, and on-disk data dirs.
-            def _suffix(rid: str) -> int:
-                try:
-                    return int(rid.rsplit("-", 1)[1])
-                except (IndexError, ValueError):
-                    return -1
-
-            known = [r["run_id"] for r in state["runs"]]
-            known += list(state["retired"])
-            data = self.dir / "data"
-            if data.exists():
-                known += [d.name.split("=", 1)[1]
-                          for d in data.glob("run_id=*")]
-            state["run_counter"] = 1 + max(
-                (_suffix(r) for r in known), default=-1
+        if state.get("format") != MANIFEST_FORMAT:
+            raise ValueError(
+                f"{self.path}: manifest format {state.get('format')!r}, "
+                f"expected {MANIFEST_FORMAT}; output dirs written before "
+                "lineage moved into the manifest are not migrated — write "
+                "to a fresh output dir"
             )
-        inflight = state.setdefault("inflight", {})
-        if isinstance(inflight, list):  # pre-timestamp lease format:
-            # stamp with the manifest file's mtime — a STABLE historical
-            # instant (>= the reservation time), so the migrated lease
-            # both gets a real grace window and actually ages out.
-            # Stamping NOW would restart the window on every read (a
-            # vacuum-only workload would never reclaim); stamping 0.0
-            # would make every legacy lease instantly reclaimable.
-            stamp = self.path.stat().st_mtime
-            state["inflight"] = {r: stamp for r in inflight}
         return state
 
     def _write(self, state: dict) -> None:
@@ -130,14 +112,19 @@ class Manifest:
 
     def commit(self, run_id: str, snapshot_id: str, buckets: list[int],
                data_schema_json: str | None = None,
-               expect_data: bool = False, n_buckets: int | None = None) -> None:
+               expect_data: bool = False, n_buckets: int | None = None,
+               lineage: dict[int, dict] | None = None) -> None:
         """``expect_data=True`` asserts the run's data dir still exists at
         commit time (callers that wrote >0 rows set it): a dir reclaimed
         by a force-vacuum between write and commit must fail the commit
         loudly, never mark buckets committed with their data gone.
         ``n_buckets`` is recorded on first commit and must match on every
         later commit — mixing two bucketings in one output dir silently
-        skips re-hashed rows on resume."""
+        skips re-hashed rows on resume. ``lineage`` maps a bucket to its
+        lineage record (the ``LINEAGE_SCHEMA`` fields but
+        ``partition_id``); the records of newly committed buckets land in
+        the same atomic write that commits them, so a refused or killed
+        commit leaves no lineage behind."""
         with self._locked():
             state = self._read()
             if expect_data and not (self.dir / "data" / f"run_id={run_id}").exists():
@@ -160,16 +147,26 @@ class Manifest:
             state["runs"].append(
                 {"run_id": run_id, "snapshot_id": snapshot_id, "buckets": new}
             )
-            state["buckets"] = sorted(set(state["buckets"]) | set(new))
+            state["buckets"] = sorted(done | set(new))
+            lineage = lineage or {}
+            state["lineage"].update(
+                {str(b): lineage[b] for b in new if b in lineage})
             if data_schema_json:
-                # recorded so committed_view can read a data dir that holds
-                # no parquet files yet (zero-row runs) without inference
+                # recorded so a data dir that holds no parquet files yet
+                # (zero-row runs) reads without inference
                 state["data_schema"] = data_schema_json
             self._settle(state, run_id)
             self._write(state)
 
-    def data_schema_json(self) -> str | None:
-        return self._read().get("data_schema")
+    def lineage(self) -> list[dict]:
+        """One ``LINEAGE_SCHEMA`` row per committed bucket that holds
+        rows, ordered by (run_id, partition_id). Compaction and vacuum
+        keep the records: they describe the run that extracted the rows."""
+        return sorted(
+            ({"partition_id": int(b), **rec}
+             for b, rec in self._read()["lineage"].items()),
+            key=lambda r: (r["run_id"], r["partition_id"]),
+        )
 
     def n_buckets(self) -> int | None:
         return self._read().get("n_buckets")
@@ -199,7 +196,7 @@ class Manifest:
             self._write(state)
 
     def snapshot(self) -> dict:
-        """One consistent, migrated view of the whole manifest state —
+        """One consistent view of the whole manifest state —
         use this when multiple views (runs/leases/retired) must agree
         (e.g. vacuum), instead of N accessor calls that each re-read."""
         return self._read()
@@ -224,17 +221,34 @@ class Manifest:
         return self._read()["runs"]
 
 
-def manifest_data_reader(spark, manifest: Manifest):
-    """DataFrameReader for the manifest's data dir: uses the recorded
-    write schema when present so a file-less (zero-row) dir reads as
-    empty instead of failing schema inference. Shared by committed_view
-    and compact()."""
+def read_runs(spark, output_dir: str, schema, runs: list[tuple[str, list[int]]]):
+    """The one reader of written data: the rows of the given (run_id,
+    buckets) pairs, read with the recorded data ``schema`` (no footer
+    inference, so a file-less zero-row dir reads as empty). The pairs are
+    partition columns, so no file of another run or bucket is opened.
+    With no pairs the data path is never touched (a fresh output dir has
+    none)."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    if not runs:
+        return spark.createDataFrame([], schema)
+    cond = reduce(
+        lambda a, b: a | b,
+        [(F.col("run_id") == run_id) & F.col("bucket").isin(buckets)
+         for run_id, buckets in runs],
+    )
+    return spark.read.schema(schema).parquet(f"{output_dir}/data").filter(cond)
+
+
+def recorded_schema(state: dict):
+    """The data schema a manifest state recorded at its first commit (a
+    ``StructType``; empty before any commit)."""
     from pyspark.sql import types as T
 
-    schema_json = manifest.data_schema_json()
-    if schema_json:
-        return spark.read.schema(T.StructType.fromJson(json.loads(schema_json)))
-    return spark.read  # pre-schema manifests: infer as before
+    recorded = state.get("data_schema")
+    return T.StructType.fromJson(json.loads(recorded)) if recorded else T.StructType([])
 
 
 def committed_view(spark, output_dir: str):
@@ -242,32 +256,7 @@ def committed_view(spark, output_dir: str):
     pairs are visible; orphan files from killed runs are filtered by the
     partition columns (partition pruning — no data files of orphaned
     runs are even opened)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    m = Manifest(output_dir)
-    runs = [r for r in m.runs() if r["buckets"]]
-    if not runs:
-        # zero committed runs: return an empty frame WITHOUT touching
-        # the data path — on a fresh output dir the parquet reader would
-        # raise PATH_NOT_FOUND before reaching any limit(0)
-        schema_json = m.data_schema_json()
-        if schema_json:
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(schema_json))
-            )
-        data = pathlib.Path(output_dir) / "data"
-        if data.exists():
-            return spark.read.parquet(f"{output_dir}/data").limit(0)
-        return spark.createDataFrame([], T.StructType([]))
-    df = manifest_data_reader(spark, m).parquet(f"{output_dir}/data")
-    cond = reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("run_id") == r["run_id"]) & F.col("bucket").isin(r["buckets"])
-            for r in runs
-        ],
-    )
-    return df.filter(cond)
+    state = Manifest(output_dir).snapshot()
+    return read_runs(spark, output_dir, recorded_schema(state),
+                     [(r["run_id"], r["buckets"]) for r in state["runs"]
+                      if r["buckets"]])

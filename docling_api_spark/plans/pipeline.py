@@ -15,7 +15,8 @@ Scale design:
   straight off the parquet/Iceberg scan splits; the only exchange in the
   job moves the (smaller) extracted output into the bucketed write
   layout. Lineage is aggregated from the written files (verify-what-
-  committed), touching only metric columns.
+  committed), touching only metric columns, and committed inside the
+  manifest together with the buckets it describes.
 - **Skew salting**: a consumer that DOES need conv-co-located rows uses
   ``skew_aware_repartition``, which splits only conversations longer
   than ``SALT_BLOCK`` turns into blocks. The write shuffle salts on
@@ -23,10 +24,10 @@ Scale design:
   n_buckets)`` salts, about two (bucket, salt) keys per write task: a
   bucket fans out over several files only when there are more write
   tasks than buckets, and is one file otherwise.
-- **Fixed per-call cost**: lineage is built as an Arrow table in the
-  driver (no Python worker on the write path), and the read-back lists
-  its bucket dirs in the driver (``get_spark`` raises Spark's parallel
-  partition-discovery threshold).
+- **Fixed per-call cost**: a call runs two Spark jobs, the data write
+  and the lineage read-back (it lists its bucket dirs in the driver:
+  ``get_spark`` raises Spark's parallel partition-discovery threshold);
+  the lineage rows go into the manifest commit, not a second table.
 """
 
 from __future__ import annotations
@@ -44,7 +45,8 @@ from docling_api_spark.operators.metering import credits_col
 from docling_api_spark.plans.checkpoint import (
     Manifest,
     committed_view,
-    manifest_data_reader,
+    read_runs,
+    recorded_schema,
 )
 from docling_api_spark.schema import LINEAGE_SCHEMA
 
@@ -141,7 +143,6 @@ def run_extraction(
     output_dir: str,
     snapshot_id: str = "snap-0",
     n_buckets: int = DEFAULT_BUCKETS,
-    num_partitions: int | None = None,
     limit_buckets: int | None = None,
     options=None,
 ) -> dict:
@@ -189,7 +190,7 @@ def run_extraction(
     # The only shuffle moves the *extracted* output (boilerplate already
     # stripped — smaller than the input) into the bucketed write layout;
     # _wsalt bounds files-per-bucket while keeping write parallelism.
-    parts = num_partitions or spark.sparkContext.defaultParallelism * 2
+    parts = spark.sparkContext.defaultParallelism * 2
     files_per_bucket = max(1, -(-2 * parts // n_buckets))
     for_write = _salted_bucket_write(extracted, parts, files_per_bucket)
 
@@ -204,17 +205,15 @@ def run_extraction(
         to_write.write.mode("append").partitionBy("run_id", "bucket").parquet(data_dir)
 
     # lineage from the data actually written (verify-what-committed): ONE
-    # read-back pass aggregated to <=n_buckets rows, collected, and both
-    # (a) appended to the lineage table and (b) summed for the run's row
-    # count — no second full count() job over the written files. The
+    # read-back pass aggregated to <=n_buckets rows, collected, summed for
+    # the run's row count (no second count() job over the written files)
+    # and committed in the manifest with the buckets it describes. The
     # explicit schema makes a zero-row run (empty input) readable — no
     # UNABLE_TO_INFER_SCHEMA on a file-less partitioned dir.
     with _job_description(spark, f"run_extraction {run_id}: lineage read-back"):
-        written = spark.read.schema(data_schema).parquet(data_dir).filter(
-            (F.col("run_id") == run_id) & F.col("bucket").isin(pending)
-        )
         lineage_rows = (
-            written.groupBy("bucket")
+            read_runs(spark, output_dir, data_schema, [(run_id, pending)])
+            .groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("rows_out"),
                 F.count(F.lit(1)).alias("rows_in"),  # extraction is 1:1
@@ -227,21 +226,16 @@ def run_extraction(
             )
             .collect()
         )
-    # built as Arrow in the driver: createDataFrame on a list of tuples
-    # would parallelize it through a Python worker (~1 s per call)
-    lineage = pa.Table.from_pylist(
-        [{"run_id": run_id, "snapshot_id": snapshot_id,
-          "partition_id": r["bucket"], **r.asDict()} for r in lineage_rows],
-        schema=to_arrow_schema(LINEAGE_SCHEMA),
-    )
-    with _job_description(spark, f"run_extraction {run_id}: lineage write"):
-        (spark.createDataFrame(lineage, schema=LINEAGE_SCHEMA)
-         .coalesce(1).write.mode("append").parquet(f"{output_dir}/lineage"))
-
-    rows = sum(int(r["rows_out"]) for r in lineage_rows)
+    lineage = {}
+    for r in lineage_rows:
+        rec = r.asDict()
+        lineage[rec.pop("bucket")] = {"run_id": run_id,
+                                      "snapshot_id": snapshot_id, **rec}
+    rows = sum(rec["rows_out"] for rec in lineage.values())
     manifest.commit(run_id, snapshot_id, pending,
                     data_schema_json=data_schema.json(),
-                    expect_data=rows > 0, n_buckets=n_buckets)
+                    expect_data=rows > 0, n_buckets=n_buckets,
+                    lineage=lineage)
     return {"run_id": run_id, "buckets": pending, "rows": rows, "resumed": bool(done)}
 
 
@@ -258,10 +252,11 @@ def compact(spark: SparkSession, output_dir: str,
     rerun is idempotent. Must not race an in-flight extraction run.
     """
     manifest = Manifest(output_dir)
+    state = manifest.snapshot()
     committed = committed_view(spark, output_dir)
     run_id = manifest.next_run_id()
     data_dir = f"{output_dir}/data"
-    n_buckets = max(len(manifest.committed_buckets()), 1)
+    n_buckets = max(len(state["buckets"]), 1)
     (
         _salted_bucket_write(
             committed.withColumn("run_id", F.lit(run_id)),
@@ -271,12 +266,8 @@ def compact(spark: SparkSession, output_dir: str,
         .partitionBy("run_id", "bucket")
         .parquet(data_dir)
     )
-    # read-back with the recorded schema (like run_extraction): inference
-    # fails on a file-less dir when every committed run was zero-row
-    rows = (
-        manifest_data_reader(spark, manifest).parquet(data_dir)
-        .filter(F.col("run_id") == run_id).count()
-    )
+    rows = read_runs(spark, output_dir, recorded_schema(state),
+                     [(run_id, state["buckets"])]).count()
     manifest.replace_runs(run_id, snapshot_id=f"compact-{run_id}",
                           expect_data=rows > 0)
     return {"run_id": run_id, "rows": rows,
@@ -437,18 +428,9 @@ def vacuum(output_dir: str, grace_seconds: float = 86400.0,
 
 def job_status(spark: SparkSession, output_dir: str) -> DataFrame:
     """The reference's GET /v1/status analog (documents.py:302-339): job
-    state derived from committed lineage, not from mutable driver state."""
-    manifest = Manifest(output_dir)
-    # Read with the EXPLICIT current schema, not footer inference: a
-    # resumed pre-upgrade output dir holds lineage files written before
-    # n_oversize existed next to post-upgrade ones, and an inferred read
-    # would adopt whichever file's footer Spark samples first (the column
-    # flickering in and out run-to-run). With the pinned schema, old rows
-    # deterministically surface n_oversize as NULL ("recorded before the
-    # counter existed"), new rows carry the real count.
-    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
-        f"{output_dir}/lineage")
-    done = manifest.committed_buckets()
-    return lineage.filter(F.col("partition_id").isin(sorted(done))).orderBy(
-        "run_id", "partition_id"
-    )
+    state derived from the lineage committed in the manifest, not from
+    mutable driver state. Built as Arrow in the driver (a LocalTableScan,
+    no Python worker)."""
+    lineage = pa.Table.from_pylist(Manifest(output_dir).lineage(),
+                                   schema=to_arrow_schema(LINEAGE_SCHEMA))
+    return spark.createDataFrame(lineage, schema=LINEAGE_SCHEMA)

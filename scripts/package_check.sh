@@ -20,15 +20,33 @@ transcripts_df(s, 50, partitions=4).write.mode("overwrite").parquet("$WORK/in")
 s.stop()
 EOF
 
+# 8 buckets: every one of them holds rows of the 50 conversations
 OUT=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
       docling_api_spark/cli.py run --input "$WORK/in" --output "$WORK/out" \
-      2>/dev/null | tail -1)
+      --buckets 8 2>/dev/null | tail -1)
 echo "$OUT"
 python - <<EOF
 import json
 s = json.loads('''$OUT''')
 assert s["rows"] > 0 and s["buckets"], s
 print("package check OK:", s["rows"], "rows,", len(s["buckets"]), "buckets")
+EOF
+
+# status reads the lineage committed in the run's manifest: one row per
+# bucket of the run summary, rows_out summing to its row count
+STATUS=$(spark-submit --master 'local[4]' --py-files "$WORK/das.zip" \
+      docling_api_spark/cli.py status --output "$WORK/out" 2>/dev/null)
+echo "$STATUS"
+python - <<EOF
+import json
+s = json.loads('''$OUT''')
+lines = [l for l in '''$STATUS'''.splitlines() if l.startswith("|")]
+cols = [c.strip() for c in lines[0].strip("|").split("|")]
+recs = [dict(zip(cols, (c.strip() for c in l.strip("|").split("|"))))
+        for l in lines[1:]]
+assert sorted(int(r["partition_id"]) for r in recs) == s["buckets"], recs
+assert sum(int(r["rows_out"]) for r in recs) == s["rows"], recs
+print("status package check OK:", len(recs), "lineage rows")
 EOF
 
 # the corpus surface ships through the same zip (exercises the operator

@@ -31,24 +31,19 @@ def _read_committed(spark, out_dir) -> pd.DataFrame:
     )
 
 
-def _assert_lineage_footers(out_dir) -> None:
-    """Every lineage file carries LINEAGE_SCHEMA's Arrow form in its
-    footer: names, types (int32 partition_id, int64 counters) and
-    nullability."""
+def _assert_status_schema(spark, out_dir) -> None:
+    """job_status carries LINEAGE_SCHEMA exactly (names, types: int32
+    partition_id, int64 counters; nullability), read from the manifest:
+    no lineage/ table is written."""
     import pathlib
 
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    from docling_api_spark.plans.pipeline import job_status
     from docling_api_spark.schema import LINEAGE_SCHEMA
 
-    want = [(f.name, f.type, f.nullable)
-            for f in to_arrow_schema(LINEAGE_SCHEMA)]
-    files = sorted((pathlib.Path(out_dir) / "lineage").glob("*.parquet"))
-    assert files
-    for f in files:
-        got = [(fl.name, fl.type, fl.nullable) for fl in pq.read_schema(f)]
-        assert got == want, (f.name, got)
+    got = [(f.name, f.dataType, f.nullable)
+           for f in job_status(spark, str(out_dir)).schema]
+    assert got == [(f.name, f.dataType, f.nullable) for f in LINEAGE_SCHEMA]
+    assert not (pathlib.Path(out_dir) / "lineage").exists()
 
 
 def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path):
@@ -57,17 +52,15 @@ def test_partial_then_resume_equals_single_shot(spark, transcripts, tmp_path):
     single = tmp_path / "single"
     split = tmp_path / "split"
 
-    s1 = run_extraction(spark, transcripts, str(single), n_buckets=8,
-                        num_partitions=8)
+    s1 = run_extraction(spark, transcripts, str(single), n_buckets=8)
     assert len(s1["buckets"]) == 8 and not s1["resumed"]
 
     # partial run: only 3 buckets committed (simulates a killed run)
     p1 = run_extraction(spark, transcripts, str(split), n_buckets=8,
-                        num_partitions=8, limit_buckets=3)
+                        limit_buckets=3)
     assert len(p1["buckets"]) == 3
     # resume: picks up ONLY the remaining 5
-    p2 = run_extraction(spark, transcripts, str(split), n_buckets=8,
-                        num_partitions=8)
+    p2 = run_extraction(spark, transcripts, str(split), n_buckets=8)
     assert p2["resumed"] and len(p2["buckets"]) == 5
     assert set(p1["buckets"]).isdisjoint(p2["buckets"])
     # idempotent third run: nothing to do
@@ -150,28 +143,106 @@ def test_committed_view_on_fresh_dir(spark, tmp_path):
     assert committed_view(spark, str(out)).count() == 0
 
 
-def test_legacy_manifest_migration_burns_retired_ids(tmp_path):
-    """Migrating a pre-run_counter manifest must seed the counter past
-    every id still visible in runs, retired entries, and on-disk data
-    dirs — len(runs) would recycle ids burned by compaction/crashes and
-    resurrect their stale rows."""
-    import json as _json
-
-    from docling_api_spark.plans.checkpoint import Manifest
+def test_refused_commit_then_resume_counts_once(spark, transcripts, tmp_path,
+                                                monkeypatch):
+    """A commit refused after the lineage read-back (the run dir is
+    force-vacuumed between write and commit) leaves no lineage behind:
+    after the resume, job_status has one row per committed bucket that
+    holds rows, and its rows_out sum to the committed row count."""
+    from docling_api_spark.plans.checkpoint import Manifest, committed_view
+    from docling_api_spark.plans.pipeline import job_status, run_extraction, vacuum
 
     out = tmp_path / "out"
-    out.mkdir()
-    # a compacted pre-counter manifest: one surviving run, two retired
-    (out / "manifest.json").write_text(_json.dumps({
+    commit = Manifest.commit
+
+    def vacuum_then_commit(self, *args, **kwargs):
+        monkeypatch.setattr(Manifest, "commit", commit)  # refuse once
+        vacuum(str(out), grace_seconds=0.0, force=True)
+        return commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(Manifest, "commit", vacuum_then_commit)
+    with pytest.raises(RuntimeError, match="commit refused"):
+        run_extraction(spark, transcripts, str(out), n_buckets=8)
+    assert Manifest(str(out)).committed_buckets() == set()
+
+    s = run_extraction(spark, transcripts, str(out), n_buckets=8)
+    assert len(s["buckets"]) == 8
+    status = job_status(spark, str(out)).toPandas()
+    view = committed_view(spark, str(out))
+    holding = sorted(r["bucket"] for r in view.select("bucket").distinct().collect())
+    assert sorted(status["partition_id"]) == holding
+    assert (status["run_id"] == s["run_id"]).all()
+    assert status["rows_out"].sum() == view.count() == s["rows"] == transcripts.count()
+
+
+_OLD_MANIFESTS = {
+    # the previous layout: no format marker, lineage in lineage/
+    "lineage_table": {
+        "runs": [{"run_id": "run-0000", "snapshot_id": "s", "buckets": [0]}],
+        "buckets": [0], "run_counter": 1, "inflight": {}, "retired": [],
+        "n_buckets": 4,
+    },
+    # before the run counter
+    "pre_counter": {
         "runs": [{"run_id": "run-0002", "snapshot_id": "s", "buckets": [0]}],
-        "buckets": [0],
-        "retired": ["run-0000", "run-0001"],
-    }))
-    # plus an orphan dir from a crashed run that burned a later id
-    (out / "data" / "run_id=run-0005").mkdir(parents=True)
-    m = Manifest(str(out))
-    assert m._read()["run_counter"] == 6
-    assert m.next_run_id() == "run-0006"
+        "buckets": [0], "retired": ["run-0000", "run-0001"],
+    },
+    # leases as a list, before they carried a reservation time
+    "list_leases": {
+        "runs": [], "buckets": [], "run_counter": 1,
+        "inflight": ["run-0000"], "retired": [],
+    },
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_OLD_MANIFESTS))
+def test_old_manifest_formats_refused(spark, transcripts, tmp_path, kind):
+    """A manifest without this version's format marker is refused, not
+    migrated: every entry point raises a ValueError naming the file
+    before any Spark job runs, and the output dir stays byte-unchanged."""
+    import json
+    import pathlib
+    import re
+
+    from docling_api_spark.plans.checkpoint import committed_view
+    from docling_api_spark.plans.pipeline import (
+        compact,
+        job_status,
+        run_extraction,
+        vacuum,
+    )
+
+    out = tmp_path / "out"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-0.parquet").write_bytes(b"old lineage")
+    (out / "data" / "run_id=run-0000" / "bucket=0").mkdir(parents=True)
+    (out / "data" / "run_id=run-0000" / "bucket=0" / "part-0.parquet"
+     ).write_bytes(b"old data")
+    manifest = out / "manifest.json"
+    manifest.write_text(json.dumps(_OLD_MANIFESTS[kind]))
+
+    def tree():
+        return {str(p.relative_to(out)): p.read_bytes() if p.is_file() else None
+                for p in sorted(pathlib.Path(out).rglob("*"))}
+
+    before = tree()
+    sc = spark.sparkContext
+    sc.setJobGroup("old-manifest", "must run no job")
+    try:
+        for call in (
+            lambda: run_extraction(spark, transcripts, str(out), n_buckets=4),
+            lambda: committed_view(spark, str(out)),
+            lambda: job_status(spark, str(out)),
+            lambda: compact(spark, str(out)),
+            lambda: vacuum(str(out), grace_seconds=0.0, force=True),
+        ):
+            with pytest.raises(ValueError, match=re.escape(str(manifest))):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("old-manifest") == []
+    assert tree() == before
 
 
 def test_noop_resume_reserves_no_id(spark, transcripts, tmp_path):
@@ -295,7 +366,7 @@ def test_empty_input_run_is_graceful(spark, tmp_path):
     s = run_extraction(spark, empty, str(out), n_buckets=4)
     assert s["rows"] == 0 and len(s["buckets"]) == 4
     assert committed_view(spark, str(out)).count() == 0
-    _assert_lineage_footers(out)
+    _assert_status_schema(spark, out)
     assert job_status(spark, str(out)).count() == 0
     p = run_extraction(spark, empty, str(out), n_buckets=4)
     assert p["buckets"] == [] and p["resumed"]
@@ -316,7 +387,7 @@ def test_lineage_metrics(spark, transcripts, tmp_path):
     out = tmp_path / "out"
     run_extraction(spark, transcripts, str(out), snapshot_id="snap-test",
                    n_buckets=8)
-    _assert_lineage_footers(out)
+    _assert_status_schema(spark, out)
     lineage = job_status(spark, str(out)).toPandas()
     assert set(lineage["partition_id"]) == set(range(8))
     assert (lineage["snapshot_id"] == "snap-test").all()
@@ -332,39 +403,6 @@ def test_lineage_metrics(spark, transcripts, tmp_path):
     assert (lineage["pages"] >= lineage["n_success"]).all()
 
 
-def test_lineage_schema_evolution(spark, transcripts, tmp_path):
-    """A resumed pre-upgrade output dir holds lineage files written
-    before the n_oversize column existed next to post-upgrade ones.
-    job_status must read the mixed directory DETERMINISTICALLY: old rows
-    surface n_oversize as NULL (recorded before the counter existed),
-    new rows carry the real count — never a schema that flickers with
-    whichever file's footer Spark samples first."""
-    from pyspark.sql import functions as F
-
-    from docling_api_spark.plans.pipeline import job_status, run_extraction
-
-    out = tmp_path / "out"
-    run_extraction(spark, transcripts, str(out), snapshot_id="snap-new",
-                   n_buckets=4)
-    # simulate a pre-upgrade run: append lineage rows WITHOUT n_oversize
-    # (the 10-column layout) into the same directory
-    legacy = (
-        spark.read.parquet(f"{out}/lineage")
-        .drop("n_oversize")
-        .withColumn("run_id", F.lit("legacy-run"))
-        .withColumn("snapshot_id", F.lit("snap-old"))
-    )
-    legacy.coalesce(1).write.mode("append").parquet(f"{out}/lineage")
-
-    status = job_status(spark, str(out)).toPandas()
-    assert "n_oversize" in status.columns
-    old = status[status["snapshot_id"] == "snap-old"]
-    new = status[status["snapshot_id"] == "snap-new"]
-    assert len(old) == 4 and len(new) == 4
-    assert old["n_oversize"].isna().all()
-    assert new["n_oversize"].notna().all() and new["n_oversize"].sum() >= 1
-
-
 def test_compact_and_vacuum(spark, transcripts, tmp_path):
     """Compaction folds multi-run small files into one run per the
     committed set; content identical; vacuum removes orphaned run dirs;
@@ -372,13 +410,22 @@ def test_compact_and_vacuum(spark, transcripts, tmp_path):
     import pathlib
 
     from docling_api_spark.plans.checkpoint import Manifest
-    from docling_api_spark.plans.pipeline import compact, run_extraction, vacuum
+    from docling_api_spark.plans.checkpoint import committed_view
+    from docling_api_spark.plans.pipeline import (
+        compact,
+        job_status,
+        run_extraction,
+        vacuum,
+    )
 
     out = tmp_path / "out"
     # two runs -> files under two run_id dirs
     run_extraction(spark, transcripts, str(out), n_buckets=8, limit_buckets=3)
     run_extraction(spark, transcripts, str(out), n_buckets=8)
     before = _read_committed(spark, out)
+    status_before = job_status(spark, str(out)).toPandas()
+    before_buckets = [r["bucket"] for r in committed_view(spark, str(out))
+                      .select("bucket").distinct().collect()]
     data = pathlib.Path(out) / "data"
     dirs_before = {d.name for d in data.glob("run_id=*")}
     assert len(dirs_before) == 2
@@ -407,6 +454,14 @@ def test_compact_and_vacuum(spark, transcripts, tmp_path):
         _read_committed(spark, out)[sorted(before.columns)],
         check_like=True,
     )
+    # the lineage records survive compaction and vacuum: one per
+    # committed bucket that holds rows, still naming the extraction runs
+    lineage = m.lineage()
+    assert job_status(spark, str(out)).toPandas().equals(status_before)
+    assert sorted(r["partition_id"] for r in lineage) == sorted(
+        before_buckets)
+    assert {r["run_id"] for r in lineage} == {
+        n.split("=", 1)[1] for n in dirs_before}
     # resume is still a no-op, and run ids never recycle
     p = run_extraction(spark, transcripts, str(out), n_buckets=8)
     assert p["buckets"] == []
